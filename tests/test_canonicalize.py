@@ -55,6 +55,26 @@ def test_cc_small_graph_dispatch_matches_scale_path(spark):
     assert local == dist
 
 
+def test_cc_scale_path_leaves_no_cached_blocks(spark):
+    """The star-contraction path releases every working checkpoint: once
+    its result is collected, the status store holds no cached RDD the
+    call created except the returned mapping's own, which the caller
+    frees with release_checkpoint."""
+    from vectrain_spark.session import release_checkpoint
+
+    def cached_rdds():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    edges = [(2, 1), (3, 2), (4, 3), (11, 10), (7, 7), (20, 21), (21, 20)]
+    df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
+    before = cached_rdds()
+    out = connected_components(df, small_graph_max_edges=0)
+    assert len(out.collect()) == 9
+    assert cached_rdds() - before == {out._fresh_ckpt_jrdd.id()}
+    release_checkpoint(out)
+    assert cached_rdds() - before == set()
+
+
 def test_cc_matches_union_find_on_aliases(spark, aliases_df, small_fixture):
     _, _, aliases = small_fixture
     mapping = {

@@ -154,6 +154,62 @@ def test_pagerank_weighted_matches_python_oracle(spark):
     assert got[2] > got[3]
 
 
+def test_pagerank_driver_path_matches_scale_path(spark):
+    """The driver branch (numpy rounds) and the DataFrame scale path emit
+    identical rows and schema: unweighted, weighted, string ids, and a
+    seeded random graph with parallel edges and self-loops."""
+    import random
+
+    rng = random.Random(7)
+    rand_edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(2_000)]
+    words = ["graph", "rank", "node", "edge", "walk", "hub", "page", "link"]
+    word_edges = []
+    for i, a in enumerate(words):
+        for b in words[i + 1 : i + 4]:
+            c = float(len(a) + len(b))
+            word_edges += [(a, b, c), (b, a, c)]
+    wedges = [(1, 2, 9.0), (1, 3, 1.0), (2, 1, 1.0), (3, 1, 1.0), (1, 2, 1.0)]
+    cases = [
+        (spark.createDataFrame(EDGES, "src long, dst long"), {}),
+        (spark.createDataFrame(wedges, "src long, dst long, cnt double"), {"weight": "cnt"}),
+        (spark.createDataFrame(word_edges, "src string, dst string, cnt double"), {"weight": "cnt"}),
+        (spark.createDataFrame(rand_edges, "src long, dst long"), {}),
+    ]
+    for e, kw in cases:
+        local = pagerank(e, **kw)  # far under the driver-branch threshold
+        dist = pagerank(e, small_graph_max_edges=0, **kw)
+        assert local.schema == dist.schema
+        assert sorted(map(tuple, local.collect())) == sorted(map(tuple, dist.collect()))
+
+
+def test_spark_round_matches_spark_f_round(spark):
+    """The driver branch's vectorized HALF_UP rounding must equal Spark's
+    F.round (shortest-repr decimal, HALF_UP) on exact decimal ties, on
+    the doubles either side of them, and on ordinary values."""
+    import numpy as np
+
+    from vectrain_spark.operators.graph import _spark_round
+
+    # decimal ties; the last ones of each list scale to just BELOW .5 in
+    # float arithmetic, so only a decimal-exact path rounds them up
+    ties = {8: [0.123456785, 1.000000005, 12.345678905, 0.000000005,
+                2.145616755, 9.420826485, 1.5e-08],
+            6: [0.1234565, 1.0000005, 2.5e-06, -0.1234565, 99999.9999995,
+                8.1835405, 16.5225345, -0.0001245]}
+    rng = np.random.default_rng(3)
+    for nd, vals in ties.items():
+        x = np.array(vals)
+        x = np.concatenate([
+            x, np.nextafter(x, np.inf), np.nextafter(x, -np.inf),
+            rng.uniform(0, 50, 2_000), [0.0, 1e17 + 0.5, 4503599627370.4965],
+        ])
+        df = spark.createDataFrame([(float(v),) for v in x], "x double")
+        want = [r[0] for r in df.select(F.round("x", nd)).collect()]
+        got = _spark_round(x, nd).tolist()
+        assert got == want, [(v, g, w) for v, g, w in zip(x, got, want) if g != w][:5]
+        assert got == [_round_half_up(float(v), nd) for v in x]
+
+
 # ---------------------------------------------------------------------------
 # triangle counting + k-core
 # ---------------------------------------------------------------------------

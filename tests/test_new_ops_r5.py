@@ -435,3 +435,16 @@ def test_scc_small_graph_dispatch_matches_scale_path(spark):
     assert local.schema == dist.schema
     key = lambda r: (r["node"], r["scc_id"], r["scc_size"])  # noqa: E731
     assert sorted(map(key, local.collect())) == sorted(map(key, dist.collect()))
+
+
+def test_scc_colors_ignores_dangling_edge_targets(spark):
+    """An edge whose dst lies outside the node set must not add a phantom
+    color row: the coloring emits exactly one row per input node."""
+    from vectrain_spark.operators.graph import _scc_colors
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 99)], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(1,), (2,)], "node long")
+    got = sorted(r["node"] for r in _scc_colors(edges, nodes).collect())
+    assert got == [1, 2]

@@ -135,10 +135,12 @@ def test_corpus_stats_single_aggregation_shuffle(spark):
 
 
 def test_pagerank_lineage_stays_flat_across_iterations(spark):
-    """Each iteration is localCheckpoint-ed, so the returned frame's plan
-    is a checkpoint scan + projection whose SIZE DOES NOT GROW with the
-    iteration count — the property that keeps iterative-join PageRank
-    from compiling exponentially deep plans at 20 iterations."""
+    """The scale path's loop is materialized through one checkpoint, so
+    the returned frame's plan is a checkpoint scan + projection whose
+    SIZE DOES NOT GROW with the iteration count — the property that keeps
+    iterative-join PageRank from compiling exponentially deep plans at
+    20 iterations. The driver branch (small graphs) returns a local
+    table: no lineage at all."""
     from vectrain_spark.operators.graph import pagerank
 
     spark.catalog.clearCache()
@@ -146,18 +148,20 @@ def test_pagerank_lineage_stays_flat_across_iterations(spark):
         [(i % 7, (i * 3) % 11) for i in range(50)], "src long, dst long"
     )
 
-    def final_plan(n_iter):
-        r = pagerank(edges, n_iter=n_iter)
+    def final_plan(n_iter, **kw):
+        r = pagerank(edges, n_iter=n_iter, **kw)
         r.collect()
         return _plan(r)
 
-    p2, p5 = final_plan(2), final_plan(5)
+    p2, p5 = final_plan(2, small_graph_max_edges=0), final_plan(5, small_graph_max_edges=0)
     # lineage truncated: the plan reads the checkpointed RDD, re-derives
     # nothing (no joins/exchanges/python), and is iteration-count-invariant
     for p in (p2, p5):
         assert "Scan ExistingRDD" in p, p[:400]
         assert "Exchange" not in p and "Join" not in p and "EvalPython" not in p
     assert abs(len(p5) - len(p2)) < 200, (len(p2), len(p5))
+    p = final_plan(5)
+    assert "Exchange" not in p and "Join" not in p and "EvalPython" not in p, p
 
 
 def test_vocab_topk_avoids_full_sort(spark):

@@ -15,8 +15,10 @@ DataFrame programs:
   aggregation skew (no explicit salt column needed for an algebraic min);
 * the min-label join back onto the (skewed) edge list is covered by AQE
   skew-join splitting (enabled in session.py);
-* each iteration is ``localCheckpoint``-ed to truncate lineage, otherwise
-  the plan grows exponentially with iterations;
+* each iteration is checkpointed (``session.fresh_checkpoint``) to
+  truncate lineage, otherwise the plan grows exponentially with
+  iterations, and released once the next round supersedes it — only the
+  returned mapping's blocks outlive the call;
 * convergence is O(log n) rounds; checked by an edge-set checksum.
 """
 
@@ -136,30 +138,28 @@ def connected_components(
     path."""
     if small_graph_max_edges is None:
         small_graph_max_edges = CC_SMALL_GRAPH_EDGES
-    from ..session import fresh_checkpoint, release_checkpoint
+    from ..session import collect_and_solve, fresh_checkpoint, release_checkpoint
 
-    e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        release_checkpoint(e_all)
-        rows = _union_find_local(
-            list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-        )
-        from pyspark.sql import types as T
-
-        src_type = edges.schema["src"].dataType
-        schema = T.StructType(
-            [T.StructField("id", src_type), T.StructField("canon", src_type)]
-        )
-        return edges.sparkSession.createDataFrame(rows, schema)
-    nodes = e_all.select(F.col("src").alias("id")).unionAll(
-        e_all.select(F.col("dst").alias("id"))
-    ).distinct()
-    e = e_all.filter(F.col("src") != F.col("dst")).localCheckpoint()
+    mapping, e_all, _ = collect_and_solve(
+        edges.select("src", "dst").distinct(),
+        small_graph_max_edges,
+        lambda pdf: _union_find_local(zip(pdf["src"].tolist(), pdf["dst"].tolist())),
+        [("id", None), ("canon", None)],
+    )
+    if mapping is not None:
+        return mapping
+    nodes = fresh_checkpoint(
+        e_all.select(F.col("src").alias("id"))
+        .unionAll(e_all.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    e = fresh_checkpoint(e_all.filter(F.col("src") != F.col("dst")))
+    release_checkpoint(e_all)
     prev = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        nxt = fresh_checkpoint(_small_star(_large_star(e)))
+        release_checkpoint(e)
+        e = nxt
         cur = _checksum(e)
         if cur == prev:
             break
@@ -168,9 +168,14 @@ def connected_components(
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # converged: every non-root has exactly one edge to its component min
     labels = e.select(F.col("src").alias("id"), F.col("dst").alias("canon"))
-    mapping = nodes.join(labels, "id", "left").select(
-        "id", F.coalesce("canon", "id").alias("canon")
+    mapping = fresh_checkpoint(
+        nodes.join(labels, "id", "left").select(
+            "id", F.coalesce("canon", "id").alias("canon")
+        )
     )
+    # the mapping is the only block set that outlives the call
+    release_checkpoint(nodes)
+    release_checkpoint(e)
     return mapping
 
 

@@ -14,7 +14,10 @@ Scale design:
   two-phase aggregate (map-side partial combine collapses hub fan-in
   before the exchange — the skew answer for algebraic aggregates);
   ``localCheckpoint`` truncates the lineage so the plan stays flat
-  across iterations instead of growing exponentially.
+  across iterations instead of growing exponentially. Edge sets at or
+  under SCC_SMALL_GRAPH_EDGES skip the loop: the same rounds run on the
+  driver in numpy (``session.collect_and_solve``, shared with CC, SCC
+  and betweenness).
 * k-hop is two self-joins with the seed side broadcast — at web scale
   seeds are a handful of entities, so no shuffle touches the edge table
   beyond its own partitioning.
@@ -28,8 +31,11 @@ matching the unrolled-CTE DuckDB oracle built by
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DAMPING = 0.85
 N_ITER = 5
@@ -53,12 +59,13 @@ def _finalize_iterative(out: DataFrame, persisted: list[DataFrame]) -> DataFrame
     frames (edge table, degrees, node set). States that a round
     references more than once must be ``persist()``-ed by the caller
     (lazy — the cache manager dedupes them inside the same job) and
-    passed here for release."""
-    from ..session import fresh_checkpoint
+    passed here for release; checkpointed inputs are released too."""
+    from ..session import fresh_checkpoint, release_checkpoint
 
     res = fresh_checkpoint(out)
     for df in persisted:
         df.unpersist()
+        release_checkpoint(df)
     return res
 
 
@@ -83,11 +90,56 @@ def _bc_if(cond: bool, df: DataFrame) -> DataFrame:
     return F.broadcast(df) if cond else df
 
 
+def _spark_round(x: np.ndarray, nd: int) -> np.ndarray:
+    """Spark ``F.round`` on doubles, vectorized: each value's
+    shortest-repr decimal rounded HALF_UP (a tie goes away from zero) to
+    ``nd`` places. The scaled product |x| * 10**nd lies within a few ulps
+    of that decimal's exact scaled value, so every value whose fraction
+    is farther than that from .5 rounds the same way in float
+    arithmetic, and ``q / 10**nd`` is then the correctly rounded double
+    of the decimal result. Values near a tie (exact decimal ties
+    included), and any too large to carry a fraction, are rounded with
+    ``Decimal`` instead — a handful per call, not one per node."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    scale = 10.0**nd
+    y = np.abs(x) * scale
+    q = np.floor(y)
+    frac = y - q
+    out = np.copysign((q + (frac >= 0.5)) / scale, x)
+    exact = Decimal(1).scaleb(-nd)
+    near = (np.abs(frac - 0.5) <= 8 * np.spacing(y)) | (y >= 2.0**52)
+    for i in np.flatnonzero(near & np.isfinite(x)):
+        d = Decimal(repr(float(x[i])))
+        out[i] = float(d.quantize(exact, rounding=ROUND_HALF_UP))
+    return out
+
+
+def _pagerank_local(pdf: pd.DataFrame, n_iter: int, damping: float) -> pd.DataFrame:
+    """Driver-side :func:`pagerank` over the collected deduped (src, dst,
+    w) edges -> (id, rank): the same synchronous rounds as the DataFrame
+    loop, each contribution computed as (rank * w) / outw in the scale
+    path's operation order and every round rounded with Spark's
+    semantics (:func:`_spark_round`)."""
+    codes, ids = pd.factorize(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
+    n, m = len(ids), len(pdf)
+    src, dst = codes[:m], codes[m:]
+    w = pdf["w"].to_numpy(dtype=np.float64)
+    outw = np.bincount(src, weights=w, minlength=n)[src]
+    base = 1.0 - damping
+    rank = np.ones(n)
+    for _ in range(n_iter):
+        s = np.bincount(dst, weights=(rank[src] * w) / outw, minlength=n)
+        rank = _spark_round(base + damping * s, ITER_ROUND)
+    return pd.DataFrame({"id": ids, "rank": _spark_round(rank, OUT_ROUND)})
+
+
 def pagerank(
     edges: DataFrame,
     n_iter: int = N_ITER,
     damping: float = DAMPING,
     weight: str | None = None,
+    small_graph_max_edges: int | None = None,
 ) -> DataFrame:
     """(src, dst[, ...]) directed edges -> (id, rank) after ``n_iter``
     synchronous iterations of rank(v) = (1-d) + d * sum(rank(u)/outdeg(u)).
@@ -99,27 +151,44 @@ def pagerank(
     ``weight`` names an edge-weight column (e.g. the KG's triple count):
     each out-edge then carries rank * w / total_out_weight(src) instead of
     an equal share; parallel edges are pre-summed per (src, dst).
+
+    Cost-based dispatch (same shape as :func:`strongly_connected_components`):
+    at or under ``small_graph_max_edges`` (default SCC_SMALL_GRAPH_EDGES)
+    deduped edges the rounds run on the driver in numpy
+    (:func:`_pagerank_local`, identical rounding) — the unrolled plan
+    below pays the per-job floor for every exchange of every round. The
+    DataFrame loop remains the scale path.
     """
+    from ..session import collect_and_solve
+
+    if small_graph_max_edges is None:
+        small_graph_max_edges = SCC_SMALL_GRAPH_EDGES
     if weight is None:
         e = edges.select("src", "dst").distinct().withColumn("w", F.lit(1.0))
     else:
         e = edges.groupBy("src", "dst").agg(
             F.sum(F.col(weight).cast("double")).alias("w")
         )
+    out, e_all, n_edges = collect_and_solve(
+        e,
+        small_graph_max_edges,
+        lambda pdf: _pagerank_local(pdf, n_iter, damping),
+        [("id", None), ("rank", T.DoubleType())],
+    )
+    if out is not None:
+        return out
     # one-time partitioning by src: every iteration's contribution join
     # then co-locates without further exchanges of the edge table.
-    # Partition count adapts to the edge count (one cheap count on the
-    # pre-aggregated edge set): entity graphs distilled from a corpus are
-    # often orders of magnitude smaller than the corpus itself, and 5
-    # iterations x several exchanges of empty 32-way partitions is pure
-    # scheduler overhead — while a web-scale edge set still fans out to
-    # the session's full parallelism.
+    # Partition count adapts to the edge count: entity graphs distilled
+    # from a corpus are often orders of magnitude smaller than the corpus
+    # itself, and 5 iterations x several exchanges of empty 32-way
+    # partitions is pure scheduler overhead — while a web-scale edge set
+    # still fans out to the session's full parallelism.
     spark = edges.sparkSession
-    n_edges = e.count()
     parts = max(
         1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1)
     )
-    e = e.repartition(parts, "src").persist()
+    e = e_all.repartition(parts, "src").persist()
     outdeg = e.groupBy("src").agg(F.sum("w").alias("outw")).persist()
     nodes = (
         e.select(F.col("src").alias("id"))
@@ -158,7 +227,7 @@ def pagerank(
             )
         )
     out = ranks.select("id", F.round("rank", OUT_ROUND).alias("rank"))
-    return _finalize_iterative(out, [e, outdeg, nodes])
+    return _finalize_iterative(out, [e, outdeg, nodes, e_all])
 
 
 def pagerank_oracle_sql(
@@ -3479,13 +3548,18 @@ def _scc_colors(
     ).collect()[0]
     n_nodes, injective, prev_s = setup["n"], setup["d"] == setup["n"], setup["s"]
     small = n_nodes <= ITER_BCAST_MAX_ROWS
+    node_keys = _bc_if(small, nodes.select("node"))
     for _ in range(max_rounds):
         rhs = colors.select(F.col("node").alias("src"), "ch", "cn")
         via_rhs = colors.select(F.col("node").alias("via"), "ch", "cn")
         if small:
             rhs, via_rhs = F.broadcast(rhs), F.broadcast(via_rhs)
-        edge_cand = edges.join(rhs, "src").select(
-            F.col("dst").alias("node"), "ch", "cn"
+        # semi-join to the node set: a dangling edge dst outside it
+        # would otherwise surface as a phantom color row
+        edge_cand = (
+            edges.join(rhs, "src")
+            .select(F.col("dst").alias("node"), "ch", "cn")
+            .join(node_keys, "node", "left_semi")
         )
         jump_cand = (
             colors.select("node", F.col("cn").alias("via"))
@@ -3641,27 +3715,18 @@ def strongly_connected_components(
     threshold) as the pipeline's connected-components path
     (pipeline.SMALL_GRAPH_EDGES); both paths emit identical rows.
     """
+    from ..session import collect_and_solve
+
     if small_graph_max_edges is None:
         small_graph_max_edges = SCC_SMALL_GRAPH_EDGES
-    e_all = _fckpt(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        _release(e_all)
-        pairs = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-        rows = _tarjan_scc_local(pairs)
-        from pyspark.sql import types as T
-
-        src_type = edges.schema["src"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("node", src_type),
-                T.StructField("scc_id", src_type),
-                # count() on the scale path is non-nullable; match it
-                T.StructField("scc_size", T.LongType(), nullable=False),
-            ]
-        )
-        out = edges.sparkSession.createDataFrame(rows, schema)
+    out, e_all, _ = collect_and_solve(
+        edges.select("src", "dst").distinct(),
+        small_graph_max_edges,
+        lambda pdf: _tarjan_scc_local(zip(pdf["src"].tolist(), pdf["dst"].tolist())),
+        # count() on the scale path is non-nullable; match it
+        [("node", None), ("scc_id", None), ("scc_size", T.LongType(), False)],
+    )
+    if out is not None:
         _note_frame(stats, out)
         return out
     e0 = _fckpt(e_all.filter(F.col("src") != F.col("dst")))
@@ -3894,6 +3959,55 @@ FROM nodes n
 BRANDES_MAX_DEPTH = 12
 
 
+def _brandes_local(pairs, seed_vals, max_depth: int) -> list[tuple]:
+    """Driver-side layered Brandes over collected (src, dst) pairs ->
+    one (v, betweenness) tuple per seed-reached non-seed node: the
+    batched dataflow's layer structure, exact integer sigmas and the
+    same per-layer 6-dp delta rounding."""
+    adj: dict = {}
+    for s, d in pairs:
+        adj.setdefault(s, []).append(d)
+    total: dict = {}
+    for seed in seed_vals:
+        # forward: BFS layers with exact path counts
+        sigma = {seed: 1}
+        layers = [[seed]]
+        visited = {seed}
+        for _k in range(max_depth):
+            nxt: dict = {}
+            for v in layers[-1]:
+                for w in adj.get(v, ()):
+                    if w not in visited:
+                        nxt[w] = nxt.get(w, 0) + sigma[v]
+            if not nxt:
+                break
+            layers.append(sorted(nxt))
+            sigma.update(nxt)
+            visited.update(nxt)
+        # backward: per-layer dependency accumulation, 6-dp rounded;
+        # every reached (seed, v) pair contributes a delta row (the
+        # deepest layer's zeros included), exactly like the batched
+        # dataflow's union of per-layer frames
+        delta = {v: 0.0 for v in layers[-1]}
+        for v in layers[-1]:
+            if v != seed:
+                total[v] = total.get(v, 0.0) + 0.0
+        for k in range(len(layers) - 2, -1, -1):
+            above = set(layers[k + 1])
+            nd: dict = {}
+            for v in layers[k]:
+                acc = 0.0
+                for w in adj.get(v, ()):
+                    if w in above:
+                        acc += (sigma[v] / sigma[w]) * (1.0 + delta[w])
+                nd[v] = round(acc, 6)
+            delta = nd
+            for v, dv in nd.items():
+                if v != seed:
+                    total[v] = total.get(v, 0.0) + dv
+    return [(v, round(dv, 6)) for v, dv in total.items()]
+
+
 def betweenness_sampled(
     edges: DataFrame,
     seeds: DataFrame,
@@ -3933,71 +4047,22 @@ def betweenness_sampled(
     DuckDB engines to common doubles — instead of paying ~2 job
     submissions per BFS layer. The batched dataflow below remains the
     scale path."""
-    from ..session import fresh_checkpoint, release_checkpoint
+    from ..session import collect_and_solve
 
     if small_graph_max_edges is None:
         small_graph_max_edges = SCC_SMALL_GRAPH_EDGES
-    e_all = fresh_checkpoint(edges.select("src", "dst").distinct())
-    n_pairs = e_all.count()
-    if 0 < n_pairs <= small_graph_max_edges:
-        pdf = e_all.toPandas()
-        release_checkpoint(e_all)
-        seed_vals = sorted(
-            {r[0] for r in seeds.select("seed").distinct().collect()}
-        )
-        adj: dict = {}
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            adj.setdefault(s, []).append(d)
-        total: dict = {}
-        for seed in seed_vals:
-            # forward: BFS layers with exact path counts
-            sigma = {seed: 1}
-            layers = [[seed]]
-            visited = {seed}
-            for _k in range(max_depth):
-                nxt: dict = {}
-                for v in layers[-1]:
-                    for w in adj.get(v, ()):
-                        if w not in visited:
-                            nxt[w] = nxt.get(w, 0) + sigma[v]
-                if not nxt:
-                    break
-                layers.append(sorted(nxt))
-                sigma.update(nxt)
-                visited.update(nxt)
-            # backward: per-layer dependency accumulation, 6-dp rounded;
-            # every reached (seed, v) pair contributes a delta row (the
-            # deepest layer's zeros included), exactly like the batched
-            # dataflow's union of per-layer frames
-            delta = {v: 0.0 for v in layers[-1]}
-            for v in layers[-1]:
-                if v != seed:
-                    total[v] = total.get(v, 0.0) + 0.0
-            for k in range(len(layers) - 2, -1, -1):
-                above = set(layers[k + 1])
-                nd: dict = {}
-                for v in layers[k]:
-                    acc = 0.0
-                    for w in adj.get(v, ()):
-                        if w in above:
-                            acc += (sigma[v] / sigma[w]) * (1.0 + delta[w])
-                    nd[v] = round(acc, 6)
-                delta = nd
-                for v, dv in nd.items():
-                    if v != seed:
-                        total[v] = total.get(v, 0.0) + dv
-        from pyspark.sql import types as T
-
-        src_type = edges.schema["src"].dataType
-        schema = T.StructType(
-            [
-                T.StructField("v", src_type),
-                T.StructField("betweenness", T.DoubleType()),
-            ]
-        )
-        rows = [(v, round(dv, 6)) for v, dv in total.items()]
-        return edges.sparkSession.createDataFrame(rows, schema)
-    e = e_all
+    out, e, _ = collect_and_solve(
+        edges.select("src", "dst").distinct(),
+        small_graph_max_edges,
+        lambda pdf: _brandes_local(
+            zip(pdf["src"].tolist(), pdf["dst"].tolist()),
+            sorted({r[0] for r in seeds.select("seed").distinct().collect()}),
+            max_depth,
+        ),
+        [("v", None), ("betweenness", T.DoubleType())],
+    )
+    if out is not None:
+        return out
     cur = (
         seeds.select(
             F.col("seed"),

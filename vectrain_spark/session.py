@@ -129,3 +129,34 @@ def release_checkpoint(df) -> None:
             jrdd.unpersist(False)
         except Exception:  # pragma: no cover - session already stopped
             pass
+
+
+def collect_and_solve(df, max_rows: int, solve, fields):
+    """Driver-side size dispatch shared by the graph operators
+    (connected components, SCC, betweenness, pagerank).
+
+    ``df`` (an edge set with a ``src`` column) is checkpointed once and
+    counted. At 1..``max_rows`` rows it is collected with ``toPandas``,
+    its checkpoint released, and ``solve(pdf)`` computes the answer on
+    the driver — every job of an iterative dataflow over a graph that
+    fits one task's memory is pure per-job scheduling floor. The answer
+    (row tuples or a pandas frame) becomes a DataFrame with ``fields``:
+    ``(name, type[, nullable])`` where a type of None means the type of
+    ``df.src``, so node ids keep the input's id type.
+
+    Returns ``(result, None, n)`` on the driver branch and
+    ``(None, ck, n)`` otherwise: ``ck`` is the materialized checkpoint
+    of ``df`` the caller's scale path reads, and must release."""
+    from pyspark.sql import types as T
+
+    ck = fresh_checkpoint(df)
+    n = ck.count()
+    if not 0 < n <= max_rows:
+        return None, ck, n
+    pdf = ck.toPandas()
+    release_checkpoint(ck)
+    src_type = df.schema["src"].dataType
+    schema = T.StructType(
+        [T.StructField(f[0], f[1] or src_type, *f[2:]) for f in fields]
+    )
+    return df.sparkSession.createDataFrame(solve(pdf), schema), None, n
