@@ -39,7 +39,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="generate a deterministic synthetic corpus of N pages instead of --pages/--aliases")
     p.add_argument("--out", default=None, help="output warehouse root")
     p.add_argument("--n-groups", type=int, default=None)
-    p.add_argument("--max-concurrent-groups", type=int, default=None)
     p.add_argument("--broadcast-dict-max", type=int, default=None,
                    help="dictionaries up to this many rows broadcast (linker probe, "
                         "mention maps, canonical mapping); bigger ones take the "
@@ -216,8 +215,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg = job.pipeline
         if args.n_groups is not None:
             cfg.n_groups = args.n_groups
-        if args.max_concurrent_groups is not None:
-            cfg.max_concurrent_groups = args.max_concurrent_groups
         if args.broadcast_dict_max is not None:
             cfg.broadcast_dict_max = args.broadcast_dict_max
     else:
@@ -225,11 +222,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.broadcast_dict_max is not None:
             kw["broadcast_dict_max"] = args.broadcast_dict_max
         cfg = PipelineConfig(
-            n_groups=args.n_groups if args.n_groups is not None else 8,
-            max_concurrent_groups=args.max_concurrent_groups
-            if args.max_concurrent_groups is not None
-            else 1,
-            **kw,
+            n_groups=args.n_groups if args.n_groups is not None else 8, **kw
         )
     wave = args.wave or (job.wave if job else None)
     stats = run_pipeline(spark, pages, aliases, out, cfg, wave=wave)

@@ -24,7 +24,7 @@ VALID = {
     },
     "source": {"type": "generate", "n_pages": 100},
     "sink": {"out": "/tmp/kg_demo"},
-    "pipeline": {"n_groups": 2, "max_concurrent_groups": 1},
+    "pipeline": {"n_groups": 2},
     "spark": {"shuffle_partitions": 8, "conf": {"spark.sql.adaptive.enabled": "true"}},
 }
 
@@ -39,7 +39,6 @@ def test_valid_config_round_trip():
     assert job.source.type == "generate" and job.source.n_pages == 100
     assert job.sink.out == "/tmp/kg_demo"
     assert job.pipeline.n_groups == 2
-    assert job.pipeline.max_concurrent_groups == 1
     # untouched pipeline knobs keep their engine defaults
     assert job.pipeline.dim > 0
     assert job.spark.shuffle_partitions == 8
@@ -53,7 +52,7 @@ def test_example_config_loads():
     )
     assert job.name == "kg-demo"
     assert job.source.type == "generate"
-    assert job.pipeline.max_concurrent_groups == 1
+    assert job.pipeline.n_groups == 8
 
 
 def test_duration_parsing():
@@ -80,6 +79,11 @@ def test_duration_parsing():
         (lambda d: d["pipeline"].update(workers=9), "unknown keys \\['workers'\\]"),
         (lambda d: d["app"]["retry_policy"].update(backoff="fast"), "invalid app.retry_policy.backoff"),
         (lambda d: d["spark"].update(batch_size=1), "unknown keys \\['batch_size'\\]"),
+        # the removed concurrent-group knob: old job files fail loudly
+        (
+            lambda d: d["pipeline"].update(max_concurrent_groups=1),
+            "unknown keys \\['max_concurrent_groups'\\]",
+        ),
     ],
 )
 def test_invalid_configs_fail_like_the_reference(mutate, msg):

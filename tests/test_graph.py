@@ -687,3 +687,57 @@ def test_katz_credits_all_walks_not_degree_shares(spark):
     got = {r["id"]: r["katz"] for r in katz_centrality(e).collect()}
     assert got == _katz_py(edges)
     assert got[9] > got[1] == got[2] == got[3] == 1.0
+
+
+def test_shortest_paths_many_seeds_take_shuffle_plan(spark, monkeypatch):
+    """The per-seed dist state has up to seeds x reached-nodes rows and
+    grows every round, so its broadcast is gated on that bound, not on the
+    edge count: with the edge count under ITER_BCAST_MAX_ROWS but many
+    seeds, the dist side plans as a shuffle join — and both plans return
+    the DuckDB oracle's rows."""
+    import duckdb
+    import pandas as pd
+
+    from vectrain_spark.operators import graph
+
+    edges_pdf = pd.DataFrame(
+        [(s, (s * 7 + k) % 24, 1 + (s + k) % 3) for s in range(12) for k in (1, 5)],
+        columns=["src", "dst", "cnt"],
+    )
+    seeds_pdf = pd.DataFrame({"seed": list(range(10))})
+    edges = spark.createDataFrame(edges_pdf)
+    seeds = spark.createDataFrame(seeds_pdf)
+    n_e = len(edges_pdf[["src", "dst"]].drop_duplicates())
+    con = duckdb.connect()
+    con.register("sp_edges", edges_pdf)
+    con.register("sp_seeds", seeds_pdf)
+    want = sorted(
+        map(tuple, con.sql(graph.shortest_paths_oracle_sql(
+            "SELECT src, dst, cnt FROM sp_edges", "SELECT seed FROM sp_seeds",
+            weight_sql="cnt",
+        )).fetchall())
+    )
+
+    plans = []
+    real_finalize = graph._finalize_iterative
+
+    def spy(out, persisted):
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return real_finalize(out, persisted)
+
+    monkeypatch.setattr(graph, "_finalize_iterative", spy)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # hints only
+    try:
+        got = {}
+        for cap in (10_000, 2 * n_e):  # bound fits / only the edge count fits
+            monkeypatch.setattr(graph, "ITER_BCAST_MAX_ROWS", cap)
+            got[cap] = sorted(
+                map(tuple, graph.shortest_paths(edges, seeds, weight="cnt").collect())
+            )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastExchange" in plans[0]
+    assert "BroadcastExchange" not in plans[1], plans[1]
+    assert got[10_000] == want
+    assert got[2 * n_e] == want

@@ -169,3 +169,82 @@ def test_config_switch_back_does_not_resurrect_pruned_groups(
     assert len(stats["groups"]) == 2
     assert _canon_set(spark, root3) == want
     assert Catalog(root3).read(spark, "triples").count() == want_n
+
+
+def test_stop_between_groups_then_resume(
+    spark, pages_df, aliases_df, full_run, tmp_path_factory, monkeypatch
+):
+    """A stop requested while the first of two groups runs takes effect
+    before the second: exactly one group commits, finalize is deferred,
+    and the resumed run equals an uninterrupted one."""
+    from vectrain_spark import pipeline
+    from vectrain_spark.monitor import clear_stop, request_stop
+
+    root, _ = full_run
+    want = _canon_set(spark, root)
+    root2 = str(tmp_path_factory.mktemp("kg_stop_mid"))
+    cfg = PipelineConfig(n_groups=2)
+    real_run_group = pipeline._run_group
+
+    def run_group_then_stop(*args, **kwargs):
+        out = real_run_group(*args, **kwargs)
+        request_stop(root2)
+        return out
+
+    monkeypatch.setattr(pipeline, "_run_group", run_group_then_stop)
+    stats = run_pipeline(spark, pages_df, aliases_df, root2, cfg)
+    monkeypatch.setattr(pipeline, "_run_group", real_run_group)
+    assert stats["stopped_early"] is True
+    assert [g["group"] for g in stats["groups"]] == [0]
+    assert stats["total_triples"] is None
+    cat = Catalog(root2)
+    assert {s["meta"].get("group") for s in cat.snapshots("triples")} == {0}
+    assert not cat.exists("canonical_triples")  # finalize deferred
+
+    clear_stop(root2)
+    stats2 = run_pipeline(spark, pages_df, aliases_df, root2, cfg)
+    assert stats2["resumed_from"] == [0]
+    assert [g["group"] for g in stats2["groups"]] == [1]
+    assert stats2.get("stopped_early", False) is False
+    assert _canon_set(spark, root2) == want
+
+
+def test_scale_path_mapping_matches_and_leaves_no_cached_blocks(
+    spark, pages_df, aliases_df, full_run, tmp_path_factory, monkeypatch
+):
+    """Both branches of the pipeline's canonical-mapping dispatch: with
+    the dictionary over broadcast_dict_max (join-path linker, no collected
+    alias frame) and CC forced onto star contraction, the canonical
+    triples equal the default run's — and no cached RDD the run created
+    outlives it."""
+    from vectrain_spark import pipeline
+    from vectrain_spark.operators import canonicalize
+
+    root, _ = full_run
+    want = _canon_set(spark, root)
+    pages_df.count(), aliases_df.count()  # session fixtures' own caches
+
+    def cached_rdds():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    # hold every mapping the run computes, so only an explicit release —
+    # not garbage collection of a dropped frame — can free its blocks
+    mappings = []
+    real_cc = pipeline.connected_components
+
+    def kept_cc(edges):
+        mappings.append(real_cc(edges))
+        return mappings[-1]
+
+    before = cached_rdds()
+    monkeypatch.setattr(pipeline, "connected_components", kept_cc)
+    monkeypatch.setattr(canonicalize, "CC_SMALL_GRAPH_EDGES", 0)
+    root2 = str(tmp_path_factory.mktemp("kg_scale_mapping"))
+    stats = run_pipeline(
+        spark, pages_df, aliases_df, root2,
+        PipelineConfig(n_groups=2, broadcast_dict_max=0),
+    )
+    assert stats["link_strategy"] == "join"
+    assert len(mappings) == 1  # the pipeline's connected-components branch ran
+    assert _canon_set(spark, root2) == want
+    assert cached_rdds() - before == set()

@@ -58,13 +58,18 @@ def test_filter_pushed_to_scan(spark):
 
 
 def test_canonical_mapping_join_is_broadcast(spark):
-    linked = spark.createDataFrame(
-        pd.DataFrame({"subj_id": [1, 2], "obj_id": [3, 4], "pred": ["a", "b"]})
+    """Both surface-map joins and both mapping joins broadcast: zero
+    shuffle on the triple stream."""
+    tri = spark.createDataFrame(
+        pd.DataFrame({"subj": ["x", "y"], "obj": ["z", "w"], "pred": ["a", "b"]})
+    )
+    linked_m = spark.createDataFrame(
+        pd.DataFrame({"surface": ["x", "y", "z", "w"], "entity_id": [1, 2, 3, 4]})
     )
     mapping = spark.createDataFrame(pd.DataFrame({"id": [1, 2, 3, 4], "canon": [1, 1, 3, 3]}))
-    plan = _plan(apply_canonical(linked, mapping))
-    assert plan.count("BroadcastHashJoin") == 2, plan
-    assert "SortMergeJoin" not in plan
+    plan = _plan(apply_canonical(tri, linked_m, mapping))
+    assert plan.count("BroadcastHashJoin") == 4, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
 def test_textstats_whole_stage_codegen_no_python(spark):

@@ -15,15 +15,13 @@ with the bias controls the round-1 review demanded:
     its timed run and stamped into its result row;
   * identical trial counts per leg, per-leg medians.
 
-A "leg" is name:pythonpath[:mcg=N] — the subprocess imports
-``vectrain_spark`` from that path, so any commit checked out into a git
-worktree is measurable against head without touching the main tree.
-mcg=N overrides PipelineConfig.max_concurrent_groups (the r2 1->4 change
-is the prime suspect), when the field exists at that commit.
+A "leg" is name:pythonpath — the subprocess imports ``vectrain_spark``
+from that path, so any commit exported into a directory (``git archive``)
+is measurable against head without touching the main tree.
 
 Usage:
   python tools/ab_kg.py --pages 200000 --cores 32 --trials 2 \
-      --legs r1:/root/repo/.ab_r1 head:/root/repo head_mcg1:/root/repo:mcg=1
+      --legs parent:../parent_tree head:.
 """
 
 from __future__ import annotations
@@ -75,8 +73,6 @@ def child(args) -> None:
             lambda it: it, schema="id long"
         ).count()
         cfg = PipelineConfig(n_groups=4)
-        if args.mcg is not None and hasattr(cfg, "max_concurrent_groups"):
-            cfg.max_concurrent_groups = args.mcg
         shutil.rmtree(args.out, ignore_errors=True)
         t0 = time.time()
         stats = run_pipeline(spark, pages, aliases, args.out, cfg)
@@ -113,22 +109,14 @@ def ensure_corpus(pages: int, cores: int) -> tuple[str, str]:
 
 
 def parent(args) -> None:
-    legs = []
-    for spec in args.legs:
-        parts = spec.split(":")
-        name, path = parts[0], parts[1]
-        mcg = None
-        for extra in parts[2:]:
-            if extra.startswith("mcg="):
-                mcg = int(extra[4:])
-        legs.append((name, path, mcg))
+    legs = [tuple(spec.split(":", 1)) for spec in args.legs]
 
     corpus_dir, alias_path = ensure_corpus(args.pages, args.cores)
     print(f"corpus ready: {corpus_dir}", flush=True)
 
-    results: dict[str, list[dict]] = {name: [] for name, _, _ in legs}
+    results: dict[str, list[dict]] = {name: [] for name, _ in legs}
     for trial in range(args.trials):
-        for name, path, mcg in legs:
+        for name, path in legs:
             cmd = [
                 sys.executable,
                 os.path.abspath(__file__),
@@ -144,8 +132,6 @@ def parent(args) -> None:
                 "--out",
                 f"/tmp/vectrain_ab_{name}",
             ]
-            if mcg is not None:
-                cmd += ["--mcg", str(mcg)]
             env = dict(os.environ)
             env["SPARK_GRAFT_CPUS"] = str(args.cores)
             env.pop("PYTHONPATH", None)
@@ -165,7 +151,7 @@ def parent(args) -> None:
             print(f"trial {trial} {name}: {row}", flush=True)
 
     summary = {}
-    for name, _, _ in legs:
+    for name, _ in legs:
         rows = results[name]
         thr = median(r["triples_per_sec"] for r in rows)
         hc = median(r["host_control_units_per_sec"] for r in rows)
@@ -186,7 +172,6 @@ def main() -> None:
     ap.add_argument("--corpus")
     ap.add_argument("--aliases")
     ap.add_argument("--out")
-    ap.add_argument("--mcg", type=int, default=None)
     ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--pages", type=int, default=200_000)
     ap.add_argument("--trials", type=int, default=2)

@@ -193,22 +193,22 @@ def q_kg_link_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts[0].unionAll(parts[1])
 
 
-def q_kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _kg_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gate corpus's canonical triples, one row per extracted triple:
+    pages -> triples -> broadcast-index link -> alias connected
+    components -> canonical ids (the pipeline's per-group chain)."""
     pages = pages_from_documents(_docs(spark, sf_dir))
     good, _ = split_quarantine(extract_pages(pages))
     tri = extract_triples_df(good)
     aliases = corpus_aliases(spark)
     idx = build_alias_index(aliases.toPandas())
     linked_m = link_mentions(spark, mention_surfaces(tri), idx)
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    linked = tri.join(F.broadcast(subj_map), "subj").join(F.broadcast(obj_map), "obj")
     mapping = connected_components(edges_from_aliases(aliases))
-    return dedup_triples(apply_canonical(linked, mapping)).select(
+    return apply_canonical(tri, linked_m, mapping)
+
+
+def q_kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup_triples(_kg_canon(spark, sf_dir)).select(
         "subj_canon", "pred", "obj_canon", "cnt", "sample_url"
     )
 
@@ -282,23 +282,7 @@ def q_kg_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from" — this is that table. Scale shape: one groupBy over the
     canonicalized triples; the evidence cap keeps hub facts from building
     unbounded arrays (slice after sort_array, all JVM)."""
-    pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
-    tri = extract_triples_df(good)
-    aliases = corpus_aliases(spark)
-    idx = build_alias_index(aliases.toPandas())
-    linked_m = link_mentions(spark, mention_surfaces(tri), idx)
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    linked = tri.join(F.broadcast(subj_map), "subj").join(
-        F.broadcast(obj_map), "obj"
-    )
-    mapping = connected_components(edges_from_aliases(aliases))
-    canon = apply_canonical(linked, mapping)
+    canon = _kg_canon(spark, sf_dir)
     return (
         canon.groupBy("subj_canon", "pred", "obj_canon")
         .agg(
@@ -7463,23 +7447,7 @@ def q_kg_fact_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark partitions and bit-equal to the DuckDB oracle."""
     from .operators.fusion import fuse_facts
 
-    pages = pages_from_documents(_docs(spark, sf_dir))
-    good, _ = split_quarantine(extract_pages(pages))
-    tri = extract_triples_df(good)
-    aliases = corpus_aliases(spark)
-    idx = build_alias_index(aliases.toPandas())
-    linked_m = link_mentions(spark, mention_surfaces(tri), idx)
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    linked = tri.join(F.broadcast(subj_map), "subj").join(
-        F.broadcast(obj_map), "obj"
-    )
-    mapping = connected_components(edges_from_aliases(aliases))
-    canon = apply_canonical(linked, mapping)
+    canon = _kg_canon(spark, sf_dir)
     source = F.concat(
         F.lit("src"),
         F.pmod(

@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 # Deduped edge sets at or under this count are solved with a driver-side
 # union-find instead of paying O(log n) star-contraction rounds, each a
 # full job submission (~0.4 s floor measured on local[32]) — the same
-# cost-based dispatch run_pipeline applies via pipeline.SMALL_GRAPH_EDGES
-# and strongly_connected_components applies via SCC_SMALL_GRAPH_EDGES.
+# cost-based dispatch strongly_connected_components applies via
+# SCC_SMALL_GRAPH_EDGES.
 # Both paths emit the identical (id, canon) mapping (pytest-asserted);
 # the distributed star contraction remains the scale path.
 CC_SMALL_GRAPH_EDGES = int(
@@ -180,25 +180,41 @@ def connected_components(
 
 
 def apply_canonical(
-    linked_triples: DataFrame, mapping: DataFrame, broadcast_map: bool = True
+    triples: DataFrame,
+    linked_mentions: DataFrame,
+    mapping: DataFrame,
+    broadcast: bool = True,
 ) -> DataFrame:
-    """Map subj_id/obj_id -> canonical ids.
+    """Extracted triples -> canonical triples: the link -> canonicalize step.
 
-    ``mapping`` is entity-dictionary-sized: when the dictionary fits an
-    executor (``broadcast_map=True``, the common case) both joins carry an
-    explicit broadcast hint — zero shuffle on the triple stream. Beyond
-    broadcast size the hint is dropped and the join plans as a shuffle
-    join, with AQE free to downgrade back to broadcast from the RUNTIME
-    size — the same dispatch rule as linking (pipeline.broadcast_dict_max).
-    Fallback ids (mentions linked to no dictionary entity) are their own
-    canonical form via coalesce.
+    ``linked_mentions`` (surface, entity_id) resolves each triple's subj
+    and obj surface to subj_id/obj_id (inner joins: a triple whose
+    surface has no link row is dropped); ``mapping`` (id, canon) then maps
+    both ids to subj_canon/obj_canon. Fallback ids (mentions linked to no
+    dictionary entity) are their own canonical form via coalesce.
+
+    Both sides are dictionary-sized: when the dictionary fits an executor
+    (``broadcast=True``, the common case) all four joins carry an explicit
+    broadcast hint — zero shuffle on the triple stream. Beyond broadcast
+    size the hints are dropped and the joins plan as shuffle joins, with
+    AQE free to downgrade back to broadcast from the RUNTIME size — the
+    same dispatch rule as linking (pipeline.broadcast_dict_max).
     """
+    subj_map = linked_mentions.select(
+        F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
+    )
+    obj_map = linked_mentions.select(
+        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
+    )
     ms = mapping.withColumnRenamed("id", "subj_id").withColumnRenamed("canon", "subj_canon")
     mo = mapping.withColumnRenamed("id", "obj_id").withColumnRenamed("canon", "obj_canon")
-    if broadcast_map:
+    if broadcast:
+        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
         ms, mo = F.broadcast(ms), F.broadcast(mo)
     return (
-        linked_triples.join(ms, "subj_id", "left")
+        triples.join(subj_map, "subj")
+        .join(obj_map, "obj")
+        .join(ms, "subj_id", "left")
         .join(mo, "obj_id", "left")
         .withColumn("subj_canon", F.coalesce("subj_canon", "subj_id"))
         .withColumn("obj_canon", F.coalesce("obj_canon", "obj_id"))

@@ -1770,7 +1770,11 @@ def shortest_paths(
     )
     e = e.repartition(parts, "src").persist()
     (n_e,) = _materialize(e)
-    small = n_e <= ITER_BCAST_MAX_ROWS
+    # dist holds at most one row per (seed, reached node), and a seed
+    # reaches itself plus edge targets only — it grows every round, so
+    # the broadcast is gated on that bound, not on the edge count
+    n_seeds = seeds.count()
+    small = n_seeds * (n_e + n_seeds) <= ITER_BCAST_MAX_ROWS
     dist = seeds.select(
         F.col("seed"), F.col("seed").alias("id"), F.lit(0.0).alias("dist")
     )
@@ -3596,8 +3600,8 @@ def _scc_colors(
 
 # Deduped edge sets at or under this count are solved with driver-side
 # iterative Tarjan instead of paying dozens of fixpoint shuffle rounds —
-# the same cost-based dispatch the pipeline applies to connected
-# components (pipeline.SMALL_GRAPH_EDGES): both paths produce the
+# the same cost-based dispatch connected_components applies
+# (CC_SMALL_GRAPH_EDGES): both paths produce the
 # identical (node, scc_id, scc_size) rows (pytest-asserted), the
 # distributed coloring remains the scale path, and the threshold is a
 # conservative driver-memory bound (1M edge pairs ~ tens of MB).
@@ -3712,8 +3716,8 @@ def strongly_connected_components(
     is a full job submission, so a ~30-round coloring over a graph that
     fits in one task's memory pays seconds of pure scheduling for
     milliseconds of compute. Same dispatch shape (and default
-    threshold) as the pipeline's connected-components path
-    (pipeline.SMALL_GRAPH_EDGES); both paths emit identical rows.
+    threshold) as connected_components (CC_SMALL_GRAPH_EDGES); both
+    paths emit identical rows.
     """
     from ..session import collect_and_solve
 
@@ -4046,7 +4050,12 @@ def betweenness_sampled(
     same per-layer 6-dp delta rounding that already pins the Spark and
     DuckDB engines to common doubles — instead of paying ~2 job
     submissions per BFS layer. The batched dataflow below remains the
-    scale path."""
+    scale path. The two paths (and the DuckDB oracle, which replays the
+    distributed one) sum a node's dependencies in different orders, so
+    a sum that lands on an exact 6-dp rounding tie may round to
+    neighbouring values: the paths can then differ by one unit in the
+    last place (1e-6). Branching-sigma graphs are where such ties arise;
+    compare with a 1e-6 tolerance there."""
     from ..session import collect_and_solve
 
     if small_graph_max_edges is None:

@@ -29,31 +29,25 @@ any parallelism (SURVEY.md §4.2 partitioning note).
 from __future__ import annotations
 
 import json
-import os
 import time
 from dataclasses import asdict, dataclass
 
-_PROF = os.environ.get("VECTRAIN_PROFILE", "") == "1"
-
-# Every _prof call appends (label, seconds) here unconditionally (a list
-# append is GIL-atomic, so concurrent groups are safe). bench.py drains it
-# to put the per-stage breakdown INSIDE the bench JSON — the driver-side
-# artifact must be able to name where kg_pipeline time went without the
-# builder re-running anything (VERDICT r3 'Next round' #1).
+# Every _prof call appends (label, seconds) here. bench.py drains it to put
+# the per-stage breakdown INSIDE the bench JSON — the driver-side artifact
+# must be able to name where kg_pipeline time went without re-running
+# anything.
 PROF_EVENTS: list[tuple[str, float]] = []
 
 
 def _prof(msg: str, t0: float) -> None:
-    dt = time.time() - t0
-    PROF_EVENTS.append((msg, dt))
-    if _PROF:
-        print(f"[prof] {msg}: {dt:.1f}s", flush=True)
+    PROF_EVENTS.append((msg, time.time() - t0))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import Catalog, GroupManifest
 from .operators.canonicalize import (
+    _union_find_local,
     apply_canonical,
     connected_components,
     dedup_triples,
@@ -84,24 +78,9 @@ class PipelineConfig:
     # produce identical links (tests/test_linking.py), so the switch never
     # changes results.
     broadcast_dict_max: int = BROADCAST_DICT_MAX
-    # Concurrent group submission (>1): bucket-groups are independent, so
-    # the driver MAY overlap their jobs (commits serialize inside Catalog/
-    # GroupManifest locks; FAIR scheduler shares cores). Round 2 defaulted
-    # this to 4 on a "20% faster at local[16]" measurement; a same-window
-    # interleaved A/B on the identical 200k-page corpus at local[32]
-    # (tools/ab_kg.py, BENCH/BASELINE.md round-3 addendum) showed the
-    # opposite at full width: mcg=4 ran 222-231 s vs 92-137 s for mcg=1
-    # across both trials — overlapping groups quadruple the
-    # python-UDF worker pools and interleave their shuffle spills, which
-    # thrashes a single host even with disk-staged intermediates. Default
-    # is 1 (each group already saturates local[*]); >1 is the lever for a
-    # REAL multi-executor cluster where per-group commit latency leaves
-    # executors idle and workers are per-executor, not per-host.
-    max_concurrent_groups: int = 1
 
     def fingerprint(self) -> str:
         d = asdict(self)
-        d.pop("max_concurrent_groups", None)  # concurrency never changes results
         d.pop("broadcast_dict_max", None)  # strategy switch never changes results
         return json.dumps(d, sort_keys=True)
 
@@ -118,33 +97,6 @@ class InjectedFailure(RuntimeError):
 SINK_PARTITIONS = 16
 
 
-# Below this edge count the entity graph is collected and solved with
-# driver-side union-find (exactly the oracle algorithm) instead of paying
-# ~2 shuffles x O(log n) rounds of distributed star contraction. Both paths
-# produce the identical mapping (tested); the distributed path is the scale
-# path for dictionary graphs that don't fit one machine.
-SMALL_GRAPH_EDGES = 1_000_000
-
-
-def _union_find(edge_iter) -> list[tuple[int, int]]:
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for s, d in edge_iter:
-        rs, rd = find(int(s)), find(int(d))
-        if rs != rd:
-            if rs < rd:
-                parent[rd] = rs
-            else:
-                parent[rs] = rd
-    return [(n, find(n)) for n in sorted(parent)]
-
-
 def _canonical_mapping(
     spark: SparkSession,
     aliases_df: DataFrame,
@@ -157,40 +109,30 @@ def _canonical_mapping(
     run and cached as a replace snapshot — resume reuses it bit-identically.
     When the dictionary was already collected for the broadcast linker
     (``alias_pdf``), the shared-alias edges come straight out of pandas —
-    no extra Spark jobs in the serial setup phase. The distributed
-    large-star/small-star path remains the scale route for dictionaries
-    whose merge graph exceeds SMALL_GRAPH_EDGES.
+    no extra Spark jobs in the serial setup phase. Otherwise
+    :func:`connected_components` size-dispatches itself; its result is
+    committed first and every consumer reads the committed snapshot, so
+    its checkpoint is released before the groups run.
     """
     import pandas as pd
 
+    from .session import release_checkpoint
+
     if cat.exists("entity_canon"):
         return cat.read(spark, "entity_canon")
-    if alias_pdf is not None:
-        amin = alias_pdf.groupby("alias")["entity_id"].transform("min")
-        mask = alias_pdf["entity_id"] != amin
-        rows = _union_find(zip(alias_pdf.loc[mask, "entity_id"], amin[mask]))
-        mapping = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
-        )
-    else:
-        edges = edges_from_aliases(aliases_df).persist()
-        if edges.count() <= SMALL_GRAPH_EDGES:
-            pdf = edges.toPandas()
-            rows = _union_find(zip(pdf["src"], pdf["dst"]))
-            mapping = spark.createDataFrame(
-                pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
-            )
-            cat.write("entity_canon", mapping, mode="replace")
-            edges.unpersist()
-            return mapping  # tiny local frame; serves this run directly
-        # distributed CC path: commit FIRST, then hand every consumer the
-        # committed parquet — returning the lazy CC plan would re-derive
-        # nodes from the alias table on each of the 2-per-group mapping
-        # joins instead of scanning the already-materialized snapshot
-        mapping = connected_components(edges)
+    if alias_pdf is None:
+        mapping = connected_components(edges_from_aliases(aliases_df))
         cat.write("entity_canon", mapping, mode="replace")
-        edges.unpersist()
+        release_checkpoint(mapping)
         return cat.read(spark, "entity_canon")
+    amin = alias_pdf.groupby("alias")["entity_id"].transform("min")
+    mask = alias_pdf["entity_id"] != amin
+    rows = sorted(_union_find_local(
+        zip(alias_pdf.loc[mask, "entity_id"].tolist(), amin[mask].tolist())
+    ))
+    mapping = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["id", "canon"]).astype("int64")
+    )
     cat.write("entity_canon", mapping, mode="replace")
     return mapping  # written for resume; the in-memory frame serves this run
 
@@ -259,26 +201,14 @@ def _run_group(
     tri = extract_triples_df(good).persist()
     tri.count()
 
-    # Linking: distinct surfaces (small) -> broadcast probe UDF -> tiny maps
-    surfaces = mention_surfaces(tri)
-    linked_m = linker(surfaces).persist()
+    # Linking: distinct surfaces (small) -> broadcast probe UDF -> tiny map.
+    # The linked-mention map is distinct-surface-sized (bounded by
+    # dictionary + tail): broadcast-hinted while the dictionary itself is
+    # broadcast-sized, otherwise planned as shuffle joins (AQE re-broadcasts
+    # from the runtime size if the group's surface set turns out small)
+    linked_m = linker(mention_surfaces(tri)).persist()
     linked_m.count()
-    subj_map = linked_m.select(
-        F.col("surface").alias("subj"),
-        F.col("entity_id").alias("subj_id"),
-        F.col("method").alias("subj_method"),
-    )
-    obj_map = linked_m.select(
-        F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-    )
-    # linked-mention maps are distinct-surface-sized (bounded by dictionary
-    # + tail): broadcast-hinted while the dictionary itself is broadcast-
-    # sized, otherwise planned as shuffle joins (AQE re-broadcasts from the
-    # runtime size if the group's surface set turns out small)
-    if broadcast_maps:
-        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
-    linked = tri.join(subj_map, "subj").join(obj_map, "obj")
-    canon = apply_canonical(linked, mapping, broadcast_map=broadcast_maps).select(
+    canon = apply_canonical(tri, linked_m, mapping, broadcast=broadcast_maps).select(
         "url",
         "sent_idx",
         "subj",
@@ -582,69 +512,34 @@ def _run_groups_and_finalize(
     spark, pages, linker, mapping, cat, manifest, cfg, done, stats,
     use_broadcast_maps, fail_after_groups, wave=None, seen_urls=None,
 ) -> dict:
-    pending = [g for g in range(cfg.n_groups) if g not in done]
-    stopped = False
-    # (mid-flight orphan deltas were already pruned by the staging sync in
-    # run_pipeline — extracted never leads triples at this point)
+    """Run the pending groups one after another (each saturates the
+    cluster), then rebuild the derived tables.
 
-    if fail_after_groups is not None:
-        # deterministic crash point for the resume tests: sequential
-        ran = 0
-        for g in pending:
-            gstats = _run_group(
-                spark, pages, linker, mapping, g, cfg.n_groups, cat,
-                cfg.fingerprint(), broadcast_maps=use_broadcast_maps,
-                wave=wave, seen_urls=seen_urls,
-            )
-            manifest.mark_done(g, gstats)
-            stats["groups"].append(gstats)
-            ran += 1
-            if ran >= fail_after_groups:
-                raise InjectedFailure(f"injected failure after {ran} groups")
-    elif pending:
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+    A graceful-stop request (monitor POST /stop -> STOP sentinel) is
+    checked before each group: committed groups stay durable, the rest
+    stay pending, and the next run resumes from the manifest — the
+    reference's start/stop control plane re-expressed over spark-submit +
+    durable checkpoints. ``fail_after_groups`` raises after that many
+    groups commit (the resume tests' crash point). Mid-flight orphan
+    deltas were already pruned by the staging sync in run_pipeline."""
+    from .monitor import stop_requested
 
-        from .monitor import stop_requested
-
-        # groups are submitted INCREMENTALLY (not all upfront) so a
-        # graceful-stop request (monitor POST /stop -> STOP sentinel) takes
-        # effect between groups: in-flight groups finish and commit, queued
-        # ones stay pending, and the next run resumes from the manifest —
-        # the reference's start/stop control plane re-expressed over
-        # spark-submit + durable checkpoints
-        workers = max(1, min(cfg.max_concurrent_groups, len(pending)))
-        queue = list(pending)
-        inflight: dict = {}
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            while queue or inflight:
-                while queue and len(inflight) < workers and not stopped:
-                    if stop_requested(cat.root):
-                        stopped = True
-                        break
-                    g = queue.pop(0)
-                    fut = ex.submit(
-                        _run_group, spark, pages, linker, mapping, g,
-                        cfg.n_groups, cat, cfg.fingerprint(),
-                        use_broadcast_maps, wave, seen_urls,
-                    )
-                    inflight[fut] = g
-                if not inflight:
-                    if stopped:
-                        break
-                    continue
-                done_futs, _ = wait(set(inflight), return_when=FIRST_COMPLETED)
-                for fut in done_futs:
-                    inflight.pop(fut)
-                    gstats = fut.result()  # re-raises group failures
-                    manifest.mark_done(gstats["group"], gstats)
-                    stats["groups"].append(gstats)
-
-    if stopped:
-        # committed groups are durable; finalize is deferred to the
-        # resuming run so the derived tables never reflect a partial input
-        stats["stopped_early"] = True
-        stats["total_triples"] = None
-        stats["canonical_triples"] = None
-        return stats
+    for g in (g for g in range(cfg.n_groups) if g not in done):
+        if stop_requested(cat.root):
+            # finalize is deferred to the resuming run so the derived
+            # tables never reflect a partial input
+            stats["stopped_early"] = True
+            stats["total_triples"] = None
+            stats["canonical_triples"] = None
+            return stats
+        gstats = _run_group(
+            spark, pages, linker, mapping, g, cfg.n_groups, cat,
+            cfg.fingerprint(), use_broadcast_maps, wave, seen_urls,
+        )
+        manifest.mark_done(g, gstats)
+        stats["groups"].append(gstats)
+        ran = len(stats["groups"])
+        if fail_after_groups is not None and ran >= fail_after_groups:
+            raise InjectedFailure(f"injected failure after {ran} groups")
     stats.update(finalize(spark, cat))
     return stats

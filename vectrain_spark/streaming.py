@@ -150,16 +150,7 @@ def start_ingest(
         good, quarantine = split_quarantine(ext)
         tri = extract_triples_df(good)
         linked_m = link_mentions(spark, mention_surfaces(tri), index).persist()
-        subj_map = linked_m.select(
-            F.col("surface").alias("subj"), F.col("entity_id").alias("subj_id")
-        )
-        obj_map = linked_m.select(
-            F.col("surface").alias("obj"), F.col("entity_id").alias("obj_id")
-        )
-        linked = tri.join(F.broadcast(subj_map), "subj").join(
-            F.broadcast(obj_map), "obj"
-        )
-        canon = apply_canonical(linked, mapping).withColumn(
+        canon = apply_canonical(tri, linked_m, mapping).withColumn(
             "group_id", F.lit(int(batch_id))
         )
         try:
